@@ -270,52 +270,75 @@ final class GraftShardsSource(inner: Source, override val schema: StructType,
   * the way KCL's bound is per-GetRecords-call).
   *
   * Per trigger: pending = current listing minus the files the inner
-  * source's own metadata log already admitted ([[FileSourceBridge
-  * .admittedFiles]] — no duplicated seen-files state); record counts come
+  * source's own metadata log already admitted (read back from that log
+  * through [[FileSourceBridge.AdmittedFiles]], so a successor rebuilds
+  * it from disk after a restart); record counts come
   * from parquet FOOTERS (exact row counts, no data read), cached per path
-  * for the life of the query. The file cap is CONSERVATIVE: the largest k
-  * such that the k LARGEST pending files still fit the cap — whichever k
-  * files the inner source then picks, the batch cannot exceed the cap.
-  * Always >= 1 so a single oversized file still makes progress (any
-  * file-granularity admission must; KCL likewise delivers at least one
-  * fetch).
+  * until the file is admitted. The listing skips what the inner listing
+  * skips ([[FileSourceBridge.hiddenPathName]]: `_temporary/`, `.staging/`,
+  * `_SUCCESS`), so a writer's staged files — zero-length or complete —
+  * are never counted as pending. The file cap is CONSERVATIVE: the
+  * largest k such that the k LARGEST pending files still fit the cap —
+  * whichever k files the inner source then picks, the batch cannot exceed
+  * the cap. Always >= 1 so a single oversized file still makes progress
+  * (any file-granularity admission must; KCL likewise delivers at least
+  * one fetch).
   *
-  * SCALE: control plane only — one listing (the inner source does its own
-  * anyway) plus one footer read per NOT-yet-admitted file, each cached
-  * forever after. Nothing is proportional to records or retained bytes.
+  * SCALE: this runs inside every trigger's `latestOffset`, before any task,
+  * so it pays only for what changed. The admitted set folds in just the
+  * log batches written since the last trigger; the footer cache holds
+  * only pending files; a footer is read once per file. The walk uses
+  * `listStatus`, not `listFiles(root, true)`: the latter builds a
+  * `LocatedFileStatus` per entry, whose `getPermission()` forks an
+  * `ls -ld` per file and directory on Hadoop's local filesystem when no
+  * native library is loaded (a few ms each; Spark's `HadoopFSUtils` avoids
+  * it for the same reason). Footers are opened from the listed status
+  * (no `getFileStatus` per file) with ONE read-options object built from
+  * the session's hadoop conf: `ParquetFileReader.open(file)` without
+  * options parses a fresh Hadoop `Configuration` (~10 ms of XML) per
+  * open. Nothing is proportional to records or retained bytes.
   */
 final class RecordAdmission(spark: SparkSession, metadataPath: String,
     streamPath: String, val cap: Long) {
+  import org.apache.hadoop.fs.{FileStatus, Path}
 
-  private val footerRows = scala.collection.mutable.HashMap.empty[org.apache.hadoop.fs.Path, Long]
+  private val conf = spark.sparkContext.hadoopConfiguration
+  private val readOptions = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+  private val log = new FileSourceBridge.AdmittedFiles(spark, metadataPath)
+  private val admitted = scala.collection.mutable.HashSet.empty[Path]
+  private val footerRows = scala.collection.mutable.HashMap.empty[Path, Long]
 
-  private def recordCount(p: org.apache.hadoop.fs.Path, conf: org.apache.hadoop.conf.Configuration): Long =
-    footerRows.getOrElseUpdate(p, {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+  /** Footer-cache entries held: at most the pending files. */
+  private[sources] def footerCacheSize: Int = footerRows.size
+
+  private def recordCount(f: FileStatus, q: Path): Long =
+    footerRows.getOrElseUpdate(q, {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, readOptions)
       try r.getRecordCount finally r.close()
     })
 
   /** Largest k with the k largest pending files' records <= cap; >= 1. */
   def safeFileCap(): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(streamPath)
+    val root = new Path(streamPath)
     val fs = root.getFileSystem(conf)
+    log.newlyAdmitted().foreach { p => admitted += p; footerRows -= p }
     if (!fs.exists(root)) return 1
-    val admitted = org.apache.spark.sql.graftbridge.FileSourceBridge
-      .admittedFiles(spark, metadataPath)
-    val pending = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (f.isFile && name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")) {
-        val q = fs.makeQualified(f.getPath)
-        if (!admitted.contains(q)) pending += q
+    val counts = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val dirs = scala.collection.mutable.Stack(root)
+    while (dirs.nonEmpty) {
+      val visible = fs.listStatus(dirs.pop())
+        .filterNot(f => FileSourceBridge.hiddenPathName(f.getPath.getName))
+      visible.foreach { f =>
+        if (f.isDirectory) dirs.push(f.getPath)
+        else if (f.isFile && f.getPath.getName.endsWith(".parquet")) {
+          val q = fs.makeQualified(f.getPath)
+          if (!admitted.contains(q)) counts += recordCount(f, q)
+        }
       }
     }
-    if (pending.isEmpty) return 1
-    val countsDesc = pending.map(recordCount(_, conf)).sortBy(-_)
+    if (counts.isEmpty) return 1
+    val countsDesc = counts.sortBy(-_)
     var sum = 0L; var k = 0
     while (k < countsDesc.size && sum + countsDesc(k) <= cap) { sum += countsDesc(k); k += 1 }
     math.max(k, 1)

@@ -29,16 +29,45 @@ object FileSourceBridge {
       options = options + ("path" -> path)
     ).createSource(metadataPath)
 
-  /** The files a `FileStreamSource` rooted at `metadataPath` has ALREADY
-    * admitted (its per-batch file-metadata log), as qualified Hadoop
-    * paths. Read-only second view over the same on-disk log the live
-    * source appends to — lets a wrapping source compute the PENDING file
-    * set (listing minus admitted) for record-based admission control
-    * without duplicating the source's seen-files state.
+  /** The inner file listing's skip rule for one path component
+    * (`HadoopFSUtils.shouldFilterOutPathName`): names starting with `_`
+    * and holding no `=` (`_temporary`, `_SUCCESS`), names starting with
+    * `.` (`.staging`, checksums), and `._COPYING_` in-flight copies. A
+    * walk that must see exactly the files a `FileStreamSource` can admit
+    * applies it to every directory and file name.
     */
-  def admittedFiles(spark: SparkSession, metadataPath: String): Set[org.apache.hadoop.fs.Path] = {
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** Read-only, incremental view of the files a `FileStreamSource` rooted
+    * at `metadataPath` has ALREADY admitted (its per-batch file-metadata
+    * log), as qualified Hadoop paths. One handle over the same on-disk log
+    * the live source appends to: each [[newlyAdmitted]] call returns only
+    * the batches logged since the previous call, so a wrapping source can
+    * keep its pending-file set (listing minus admitted) without
+    * duplicating the source's seen-files state or re-reading the whole
+    * log every trigger.
+    */
+  final class AdmittedFiles(spark: SparkSession, metadataPath: String) {
     import org.apache.spark.sql.execution.streaming.runtime.FileStreamSourceLog
-    val log = new FileStreamSourceLog(FileStreamSourceLog.VERSION, spark, metadataPath)
-    log.allFiles().map(_.sparkPath.toPath).toSet
+    private val log = new FileStreamSourceLog(FileStreamSourceLog.VERSION, spark, metadataPath)
+    private var lastBatch = -1L
+
+    /** Files of the batches logged since the previous call. The first
+      * call returns every file admitted so far, read from the latest
+      * compaction on (a successor over a long-lived log never walks
+      * batch files that compaction already deleted); later calls read
+      * only the new batches (`get` resolves a compaction batch to its
+      * own entries).
+      */
+    def newlyAdmitted(): Seq[org.apache.hadoop.fs.Path] = {
+      val latest = log.getLatestBatchId().getOrElse(-1L)
+      if (latest <= lastBatch) return Nil
+      val entries =
+        if (lastBatch < 0) log.allFiles().toSeq
+        else log.get(Some(lastBatch + 1), Some(latest)).toSeq.flatMap(_._2)
+      lastBatch = latest
+      entries.map(_.sparkPath.toPath)
+    }
   }
 }

@@ -30,6 +30,38 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   private def batchEvents = graft.Tables.events(spark, sf001)
 
+  /** Write the first `rows` events (by event_id) as ONE parquet file at
+    * `dir/rel`, with the given modification time (the inner file source
+    * admits the oldest files first).
+    */
+  private def writeFile(dir: String, rel: String, rows: Int, mtime: Long): Unit = {
+    val tmp = s"${newBase()}/f"
+    batchEvents.orderBy("event_id").limit(rows).coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val dst = new java.io.File(s"$dir/$rel")
+    dst.getParentFile.mkdirs()
+    Files.move(part.toPath, dst.toPath)
+    dst.setLastModified(mtime)
+  }
+
+  /** AvailableNow drain; returns each micro-batch's record count. */
+  private def drainSizes(df: DataFrame, ckpt: String): Seq[Long] = {
+    val sizes = mutable.Buffer.empty[Long]
+    val q = df.select("event_id")
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        val n = b.count()
+        sizes.synchronized { sizes += n }
+        ()
+      }
+      .start()
+    q.awaitTermination()
+    assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
+    sizes.synchronized(sizes.toVector)
+  }
+
   private def open(dir: String, position: String, extra: Map[String, String] = Map.empty): DataFrame = {
     val r = spark.readStream.format("graft-shards")
       .option("path", dir)
@@ -400,6 +432,70 @@ class GraftShardsProviderSpec extends AnyFunSuite with SparkSpec with Matchers {
     // the one uncommitted batch redelivers: distinct ids == full stream
     got.synchronized(got.toVector).distinct.sorted shouldBe
       batchEvents.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+  }
+
+  test("maxRecordsPerTrigger: a writer's staged files under _temporary/ are skipped, like the inner listing skips them") {
+    // `df.write.parquet(dir)` (ShardedEvents.appendTranche) stages part
+    // files under dir/_temporary/ before committing them. The inner file
+    // source never lists them, so the record admission must not either:
+    // a still-open (zero-length) one has no footer to read, and a complete
+    // one larger than the cap would stay pending forever and pin every
+    // later trigger to one file.
+    val cap = 600L
+    def drain(staged: Boolean): Seq[Long] = {
+      val base = newBase()
+      val dir = s"$base/shards"
+      ShardedEvents.appendTranche(batchEvents, dir, 4)
+      if (staged) {
+        val inFlight = new java.io.File(s"$dir/_temporary/0/_temporary/attempt_0/shard=1/part-99999.parquet")
+        inFlight.getParentFile.mkdirs()
+        assert(inFlight.createNewFile())
+        writeFile(dir, "_temporary/0/task_0/shard=2/part-99998.parquet", rows = 1000,
+          mtime = System.currentTimeMillis())
+      }
+      drainSizes(open(dir, "trim_horizon", Map("maxRecordsPerTrigger" -> cap.toString)),
+        s"$base/ckpt")
+    }
+    val plain = drain(staged = false)
+    val withStaged = drain(staged = true)
+    withStaged.foreach(s => assert(s <= cap, s"batch of $s records exceeds the $cap cap: $withStaged"))
+    withStaged.sum shouldBe batchEvents.count()
+    assert(plain.size >= 2, s"cap must split the drain into multiple batches, got $plain")
+    withStaged.size shouldBe plain.size
+  }
+
+  test("maxRecordsPerTrigger: the file cap is the largest k whose k largest pending files fit (pinned)") {
+    // pins the values the cap conversion has always returned, over shard
+    // directories with files of different sizes and one nested
+    // sub-directory, so a change to the listing or footer reads provably
+    // picks the same k
+    val base = newBase()
+    val dir = s"$base/shards"
+    val t0 = System.currentTimeMillis() - 60000L
+    // oldest first, the order the inner source admits them in
+    Seq("shard=0/part-00000.parquet" -> 120, "shard=1/part-00001.parquet" -> 500,
+      "shard=2/nested/part-00002.parquet" -> 40, "shard=3/part-00003.parquet" -> 300,
+      "shard=0/part-00004.parquet" -> 80, "shard=1/part-00005.parquet" -> 200)
+      .zipWithIndex.foreach { case ((rel, rows), i) => writeFile(dir, rel, rows, t0 + i * 1000L) }
+    // largest first: 500, 300, 200, 120, 80, 40 — running sums 500, 800,
+    // 1000, 1120, 1200, 1240
+    for ((cap, k) <- Seq(1L -> 1, 499L -> 1, 500L -> 1, 799L -> 1, 800L -> 2, 999L -> 2,
+        1000L -> 3, 1119L -> 3, 1120L -> 4, 1239L -> 5, 1240L -> 6, 1000000L -> 6))
+      withClue(s"cap $cap: ") {
+        new RecordAdmission(spark, s"$base/meta-$cap", dir, cap).safeFileCap() shouldBe k
+      }
+
+    // per trigger under a 700 cap: {all 6 pending} k=1 admits the 120;
+    // {500, 40, 300, 80, 200} k=1 admits the 500; {40, 300, 80, 200} k=4
+    val ckpt = s"$base/ckpt"
+    val watcher = new RecordAdmission(spark, s"$ckpt/sources/0", dir, 700L)
+    watcher.safeFileCap() shouldBe 1
+    watcher.footerCacheSize shouldBe 6
+    drainSizes(open(dir, "trim_horizon", Map("maxRecordsPerTrigger" -> "700")), ckpt) shouldBe
+      Seq(120L, 500L, 620L)
+    // every file is admitted now: the footer cache holds none of them
+    watcher.safeFileCap() shouldBe 1
+    watcher.footerCacheSize shouldBe 0
   }
 
   test("options: non-positive or non-numeric maxRecordsPerTrigger fails eagerly") {
